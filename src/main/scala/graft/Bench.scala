@@ -168,31 +168,8 @@ object Bench {
   private val AmbientRatioCap = 1.25
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.local.dir", SparkEnv.localDir)
-      .config("spark.ui.enabled", "false")
-      // AQE coalesce floor (round 15, guide §2.2/§2.5): AQE's default
-      // 1 MB minPartitionSize coalesces every sub-32 MB shuffle below
-      // `cpus` partitions — at bench scale that put CPU-DENSE, small-BYTE
-      // stages (levenshtein verify, array_intersect re-checks, pair
-      // joins) on ONE core (measured: q42 10.7→5.4 s, q113 9.9→5.5 s,
-      // q181 6.5→3.2 s cold with the 64k floor; sub-second tail
-      // unchanged). 64k keeps the declared shuffle.partitions=cpus
-      // parallelism for any shuffle ≥ cpus·64k. At production scale the
-      // floor is inert: coalescing targets max(bytes/parallelism, floor),
-      // and real shuffles are GBs, so partitions sit far above either
-      // floor — this knob only stops parallelism collapse on small
-      // inputs. Env-parameterized for cluster tuning.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE", "64k"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = SparkEnv.sfDir
+    val spark = SparkEnv.session(SparkEnv.cpus)
     val wall0 = System.nanoTime()
     def wallS: Long = (System.nanoTime() - wall0) / 1000000000L
     // Untimed warmup: JIT + codegen + parquet footer caches, so the first

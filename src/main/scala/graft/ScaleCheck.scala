@@ -1,7 +1,7 @@
 package graft
 import graft.client.GraftClient
 import graft.table._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import scala.concurrent.duration._
 
@@ -13,14 +13,9 @@ import scala.concurrent.duration._
   */
 object ScaleCheck {
   def main(args: Array[String]): Unit = {
-    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val dir = SparkEnv.sfDir
     val mult = args.headOption.map(_.toInt).getOrElse(8)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.local.dir", SparkEnv.localDir)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEnv.session(SparkEnv.cpus)
     spark.range(1000000).selectExpr("sum(id)").collect() // warmup
 
     val ev1 = spark.read.parquet(s"$dir/events.parquet")

@@ -133,11 +133,11 @@ object Dedup {
     // Hot-shingle guard as a broadcast anti-join: the set of shingles with
     // df > maxDf has at most |rows|/maxDf members — broadcastable by
     // definition — so this costs one aggregation instead of a full
-    // shuffle+sort window over every shingle row. Checkpointed (round 15):
-    // `kept` is consumed four times (sizes + both self-join sides + the
-    // pair agg input), and each consumer would otherwise re-run the
-    // full-table hot aggregation — AQE exchange reuse is not guaranteed
-    // across post-checkpoint replicas.
+    // shuffle+sort window over every shingle row. `kept` itself is not
+    // checkpointed: its three consumers (sizes + both self-join sides)
+    // each re-read the checkpointed `sh` and carry their own copy of the
+    // hot aggregation and anti-join, which AQE exchange reuse may share
+    // but is not guaranteed to.
     val hot = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
       .filter(col("df") > maxDf)
       .select(col("shingle"))
@@ -663,7 +663,7 @@ object Dedup {
     * matters at scale: equal-length hex strings compare lexicographically
     * = numerically, the hash-aggregate buffer holds 15-byte values
     * instead of 32-char rotations, and partial-agg merge traffic halves.
-    * Cold-JVM A/B ([[graft.BenchMinhash]], one fresh JVM per variant,
+    * Cold-JVM A/B (one fresh JVM per variant,
     * min-of-3 on sf0.1 full q22 pipeline, identical 256 candidate pairs):
     * window 2.13 s vs rotation 3.10 s — 1.46× faster. (Round-5 bench once
     * showed q22 at 7.4 s vs round-4's 0.57 s: the 0.57 was subsidized by a

@@ -10,7 +10,7 @@ re-implemented verbatim here), timed on the same data, same session
 config, same noop-write protocol as graft.Bench.
 
 Usage: python3 tools/baseline_raw.py [sfDir]
-Compare with: tools/run.sh graft.DevOne q01_derived_expr <sfDir> 3   etc.
+Compare with: SPARK_GRAFT_SF_DIR=<sfDir> tools/run.sh graft.JobProf q01_derived_expr
 """
 import sys
 import time
